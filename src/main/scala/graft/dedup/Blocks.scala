@@ -1,6 +1,9 @@
 package graft.dedup
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.{BlockId, RDDBlockId}
 
 /** Eager block release for retired localCheckpoint leaves (the CC loop's
   * and the ingest loop's §5 memory hygiene): dropping a dead leaf's blocks
@@ -27,6 +30,18 @@ private[graft] object Blocks {
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
+  /** Whether every partition of the checkpoint leaf `df` is materialized:
+    * one driver-side block-manager lookup, no job. (The RDD's checkpoint
+    * flag is not enough: a job whose map stages computed the leaf can end
+    * without setting it, as on a NearDupIndex replay.)
+    */
+  def materialized(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case lr: LogicalRDD =>
+      SparkEnv.get.blockManager.master.getLocations(lr.rdd.partitions
+        .map(p => RDDBlockId(lr.rdd.id, p.index): BlockId)).forall(_.nonEmpty)
+    case _ => false
+  }
+
   /** Drop a retired checkpoint leaf's blocks eagerly. Only ever call on
     * leaves whose every consumer is already materialized — a later read
     * of the frame would find neither blocks nor lineage.
@@ -34,7 +49,7 @@ private[graft] object Blocks {
   def release(df: DataFrame): Unit = {
     silenced
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
   }

@@ -358,7 +358,12 @@ final class NearDupIndex(
     writeData(stripSig(keptB)
       .unionByName(membershipRows(keptB.select("id", "sig").dropDuplicates("id"))))
     // keptB is materialized (by the write): freshB's blocks are now dead —
-    // everything downstream reads keptB's checkpoint
+    // everything downstream reads keptB's checkpoint. Released while keptB
+    // were still lazy, a later read of keptB would find neither blocks nor
+    // lineage, so the precondition is checked, not assumed.
+    if (!Blocks.materialized(keptB))
+      throw new IllegalStateException("dedupAndAppend: the index write did not " +
+        "materialize the survivor checkpoint; refusing to release the blocks it reads")
     Blocks.release(freshB)
     val keptIds = keptB.select("id").dropDuplicates("id")
     docs.join(keptIds.select(col("id").as("__kept_id")),

@@ -96,11 +96,10 @@ object ZOrder {
   }
 
   /** `OPTIMIZE ... ZORDER BY` for an existing parquet table: rewrite it
-    * z-order-clustered IN PLACE with a staged atomic swap (write to
-    * `.zorder.tmp`, stage the live table at `.zorder.old`, swap, drop the
-    * stage — readers see the old or the new layout, never a mix; a failed
-    * swap rolls back loudly). For a partitioned table pass `partitionCols`
-    * — EVERY directory level, in order (day=X/hour=Y needs
+    * z-order-clustered IN PLACE with [[Commit.swap]] through `.zorder.tmp`
+    * and `.zorder.old` — readers see the old or the new layout, never a
+    * mix; a failed swap rolls back loudly. For a partitioned table pass
+    * `partitionCols` — EVERY directory level, in order (day=X/hour=Y needs
     * Seq("day", "hour")): the layout is preserved and the Morton
     * clustering applies WITHIN each leaf partition (range-partitioned on
     * (partitions..., z), so each partition's files still cover contiguous
@@ -110,17 +109,13 @@ object ZOrder {
     * off for the round trip, permanently retyped to string), so any
     * mismatch refuses loudly instead.
     *
-    * Crash window: between the two renames the table lives only at
-    * `.zorder.old`. [[recover]] (also called on entry here) restores it —
-    * call it at open time from any long-lived process that optimizes, the
-    * same discipline as StateTable's staged-swap recovery.
+    * A crash mid-swap is healed by [[recover]] (also called on entry here)
+    * — call it at open time from any long-lived process that optimizes.
     */
   def optimize(spark: org.apache.spark.sql.SparkSession, path: String,
       cols: Seq[String], bits: Int = 8, partitionCols: Seq[String] = Nil,
       numFiles: Int = 0): Unit = {
     recover(spark, path)
-    val tmp = path + ".zorder.tmp"
-    val old = path + ".zorder.old"
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the ACTUAL directory-partition levels, discovered recursively — a
     // level partitionCols does not cover would be read FLATTENED (its dirs
@@ -148,19 +143,14 @@ object ZOrder {
     val df = s2.read.parquet(path)
     partitionCols.foreach(pc => require(df.columns.contains(pc),
       s"optimize: no partition column $pc"))
-    writeZOrdered(df, tmp, cols, bits, numFiles,
-      mode = "overwrite", partitionBy = partitionCols)
-    val (p, t, o) = (new Path(path), new Path(tmp), new Path(old))
-    if (fs.exists(o)) fs.delete(o, true)
-    if (!fs.rename(p, o)) sys.error(s"optimize: failed to stage $path -> $old")
-    if (!fs.rename(t, p)) {
-      val restored = fs.rename(o, p)
-      sys.error(s"optimize: failed to swap $tmp -> $path" +
-        (if (restored) " (rolled back)"
-         else s"; ROLLBACK ALSO FAILED — table preserved at $old, restored by recover()"))
+    Commit.swap(fs, new Path(path), tmpOf(path), oldOf(path), Nil, "optimize") {
+      writeZOrdered(df, tmpOf(path).toString, cols, bits, numFiles,
+        mode = "overwrite", partitionBy = partitionCols)
     }
-    fs.delete(o, true)
   }
+
+  private def tmpOf(path: String) = new Path(path + ".zorder.tmp")
+  private def oldOf(path: String) = new Path(path + ".zorder.old")
 
   /** The table's directory-partition column names, outermost first,
     * discovered by walking `name=value` directories level by level (all
@@ -188,21 +178,12 @@ object ZOrder {
     out.toSeq
   }
 
-  /** Open-time recovery for [[optimize]]'s crash window: a table absent at
-    * its path but present at `.zorder.old` moves back; a leftover stage
-    * beside a live table is dropped. No-op otherwise.
+  /** Open-time recovery for [[optimize]]'s crash window
+    * ([[Commit.recoverSwap]]). No-op on a healthy table.
     */
-  def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(path)
-    val o = new Path(path + ".zorder.old")
-    val t = new Path(path + ".zorder.tmp")
-    if (!fs.exists(p) && fs.exists(o)) {
-      if (!fs.rename(o, p))
-        sys.error(s"recover: failed to restore $o -> $p")
-    } else if (fs.exists(o)) fs.delete(o, true)
-    if (fs.exists(t)) fs.delete(t, true)
-  }
+  def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Commit.recoverSwap(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(path), tmpOf(path), oldOf(path), Nil)
 
   /** Write `df` z-order-clustered by `cols` into `numFiles` range slices of
     * the Morton curve (0 = the session's shuffle parallelism). Each output

@@ -5,9 +5,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Commit
+
 /** Shared maintenance plumbing for the persisted vector indexes: the tiny
-  * metadata files behind the drift metric and the offline
-  * rebuild-and-swap that answers centroid drift (SCALE.md §4).
+  * metadata files behind the drift metric, and the on-disk names of the
+  * offline rebuild-and-swap that answers centroid drift (SCALE.md §4).
   */
 private[similarity] object IndexMaint {
 
@@ -31,99 +33,14 @@ private[similarity] object IndexMaint {
     }
   }
 
-  /** Swap a freshly-built index directory into the live path: move the
-    * live tree aside, move the fresh tree in, drop the old one. Readers
-    * that already resolved their file listings keep their snapshot; new
-    * reads see the rebuilt index.
+  /** A rebuild is written at `<path>-rebuild` and swapped in through
+    * `<path>-old` ([[Commit.swap]]); the exactly-once ledger of the
+    * inverted lists is carried across, so a committed batch id stays
+    * deduplicated after a rebuild.
     */
-  def swapIn(spark: SparkSession, livePath: String, freshPath: String): Unit = {
-    val live = new Path(livePath)
-    val f = fs(spark, live)
-    val old = new Path(livePath + "-old")
-    f.delete(old, true)
-    if (f.exists(live))
-      require(f.rename(live, old), s"swap: cannot move $live aside")
-    require(f.rename(new Path(freshPath), live), s"swap: cannot move $freshPath into $live")
-    f.delete(old, true): Unit
-  }
-
-  /** Open-time recovery for a crash inside [[swapIn]]: between
-    * rename(live, old) and rename(fresh, live) there is no live tree —
-    * if an open finds exactly that state, restore the `-old` tree so the
-    * index serves its pre-swap content (the [[graft.mv.StateTable]]
-    * recoverFromCompact posture applied to the index swap).
-    */
-  def recoverSwap(spark: SparkSession, livePath: String): Unit = {
-    val live = new Path(livePath)
-    val f = fs(spark, live)
-    val old = new Path(livePath + "-old")
-    if (!f.exists(live) && f.exists(old))
-      require(f.rename(old, live), s"swap recovery: cannot restore $old into $live")
-  }
-
-  /** Exactly-once append of a partitioned batch into `dataPath` — the
-    * [[graft.mv.StateTable.appendExactlyOnce]] protocol for the vector
-    * indexes: stage the batch, MOVE its files in under `batch-<id>-`
-    * names, then create the `_ledger/batch-<id>` marker (the commit
-    * point). Replays of a committed id return false and touch nothing;
-    * a crash before the marker leaves batch-tagged orphans that
-    * [[recoverInFlight]] removes on the next open. Underscore paths are
-    * invisible to Spark's listing, so staging/ledger never pollute reads.
-    */
-  def appendExactlyOnce(spark: SparkSession, dataPath: String, partitionCol: String,
-      rows: DataFrame, batchId: Long): Boolean = {
-    val root = new Path(dataPath)
-    val f = fs(spark, root)
-    val marker = new Path(dataPath, s"_ledger/batch-$batchId")
-    if (f.exists(marker)) return false
-    cleanBatch(f, root, batchId)
-    val staging = new Path(dataPath, s"_staging/$batchId")
-    rows.write.mode("overwrite").partitionBy(partitionCol).parquet(staging.toString)
-    for (part <- f.listStatus(staging).toSeq
-         if part.isDirectory && part.getPath.getName.contains("=")) {
-      val target = new Path(root, part.getPath.getName)
-      f.mkdirs(target)
-      for (file <- f.listStatus(part.getPath).toSeq
-           if !file.getPath.getName.startsWith("_") && !file.getPath.getName.startsWith(".")) {
-        if (!f.rename(file.getPath, new Path(target, s"batch-$batchId-${file.getPath.getName}")))
-          sys.error(s"exactly-once append: failed to move ${file.getPath} into $target")
-      }
-    }
-    f.delete(staging, true)
-    f.mkdirs(marker.getParent)
-    f.create(marker, true).close()
-    true
-  }
-
-  private def cleanBatch(f: org.apache.hadoop.fs.FileSystem, root: Path, batchId: Long): Unit = {
-    f.delete(new Path(root, s"_staging/$batchId"), true)
-    if (f.exists(root))
-      for (part <- f.listStatus(root).toSeq if part.isDirectory && part.getPath.getName.contains("=");
-           file <- f.listStatus(part.getPath).toSeq
-           if file.getPath.getName.startsWith(s"batch-$batchId-"))
-        f.delete(file.getPath, false)
-  }
-
-  /** Open-time recovery: remove traces of batch ids whose marker is
-    * missing (in-flight at crash time), so the stream's retry re-ingests
-    * from scratch.
-    */
-  def recoverInFlight(spark: SparkSession, dataPath: String): Unit = {
-    val root = new Path(dataPath)
-    val f = fs(spark, root)
-    if (!f.exists(root)) return
-    val stagingIds = {
-      val st = new Path(dataPath, "_staging")
-      if (f.exists(st)) f.listStatus(st).toSeq.map(_.getPath.getName) else Nil
-    }
-    val movedIds = for {
-      part <- f.listStatus(root).toSeq if part.isDirectory && part.getPath.getName.contains("=")
-      file <- f.listStatus(part.getPath).toSeq if file.getPath.getName.startsWith("batch-")
-    } yield file.getPath.getName.drop("batch-".length).takeWhile(_ != '-')
-    for (id <- (stagingIds ++ movedIds).distinct; n <- scala.util.Try(id.toLong).toOption
-         if !f.exists(new Path(dataPath, s"_ledger/batch-$n")))
-      cleanBatch(f, root, n)
-  }
+  def fresh(path: String) = new Path(s"$path-rebuild")
+  def old(path: String) = new Path(s"$path-old")
+  val keep = Seq("data/_ledger")
 }
 
 /** Persisted, incrementally-growable IVF index — the vector twin of
@@ -154,11 +71,12 @@ final class IvfIndex(
   private val centsPath = s"$path/centroids"
   private val dataPath = s"$path/data"
 
-  // crash recovery: first heal a half-finished rebuild swap (restore the
-  // '-old' tree if the live path vanished mid-swap), then purge in-flight
-  // exactly-once batch traces
-  IndexMaint.recoverSwap(spark, path)
-  IndexMaint.recoverInFlight(spark, dataPath)
+  private val fs = IndexMaint.fs(spark, new Path(path))
+
+  // crash recovery: a half-finished rebuild swap, then in-flight appends
+  Commit.recoverSwap(fs, new Path(path), IndexMaint.fresh(path), IndexMaint.old(path),
+    IndexMaint.keep)
+  Commit.recoverAppends(fs, new Path(dataPath))
 
   /** Train centroids on `corpus` (seeded pick + distributed Lloyd) and
     * write the full initial index. Overwrites any existing index at
@@ -211,13 +129,18 @@ final class IvfIndex(
   /** The answer to centroid drift (SCALE.md §4): train fresh centroids on
     * `corpus` (typically everything indexed so far plus the drifted
     * stream), build a complete new index at a sibling path, and swap it
-    * into `path`. Appends against the old centroids remain valid history;
-    * the swap is the ClickHouse-style background re-merge made explicit.
+    * into `path` with [[graft.engine.Commit.swap]]. Appends against the old
+    * centroids remain valid history, and the exactly-once ledger survives,
+    * so a committed batch id stays deduplicated — `corpus` must therefore
+    * hold every committed batch. The swap is the ClickHouse-style
+    * background re-merge made explicit.
     */
   def rebuildAndSwap(corpus: DataFrame, nlist: Int, lloydIterations: Int = 2): Unit = {
-    val freshPath = s"$path-rebuild"
-    new IvfIndex(spark, freshPath, idCol, vecCol).build(corpus, nlist, lloydIterations)
-    IndexMaint.swapIn(spark, path, freshPath)
+    Commit.swap(fs, new Path(path), IndexMaint.fresh(path), IndexMaint.old(path),
+        IndexMaint.keep, "rebuildAndSwap") {
+      new IvfIndex(spark, IndexMaint.fresh(path).toString, idCol, vecCol)
+        .build(corpus, nlist, lloydIterations)
+    }
   }
 
   /** [[rebuildAndSwap]] from the index's own stored vectors — no external
@@ -243,12 +166,12 @@ final class IvfIndex(
 
   /** Exactly-once [[append]] keyed by a stream's batchId: a foreachBatch
     * retry of a committed id is a no-op, and a crash mid-append heals on
-    * the next open — the [[graft.mv.StateTable]] ledger protocol applied
-    * to the inverted lists. Returns false on a deduplicated replay.
+    * the next open ([[graft.engine.Commit.appendOnce]] on the inverted
+    * lists). Returns false on a deduplicated replay.
     */
   def appendExactlyOnce(batch: DataFrame, batchId: Long): Boolean =
-    IndexMaint.appendExactlyOnce(spark, dataPath, "list_id",
-      Ann.ivfIndex(batch, idCol, vecCol, centroids), batchId)
+    Commit.appendOnce(fs, new Path(dataPath), Commit.token(batchId, ""), "list_id",
+      Ann.ivfIndex(batch, idCol, vecCol, centroids))
 
   /** The persisted inverted lists (list_id is the partition column). */
   def index: DataFrame = spark.read.parquet(dataPath)

@@ -1,7 +1,10 @@
 package graft.similarity
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.engine.Commit
 
 /** Persisted RESIDUAL IVF-PQ index — [[PqIndex]]'s layout with the
   * residual-coded payload of [[IvfPq]] (codes quantize `vec − centroid`,
@@ -29,10 +32,12 @@ final class IvfPqIndex(
   private val cbPath = s"$path/codebook"
   private val dataPath = s"$path/data"
 
-  // crash recovery: heal a half-finished rebuild swap, then purge
-  // in-flight exactly-once batch traces
-  IndexMaint.recoverSwap(spark, path)
-  IndexMaint.recoverInFlight(spark, dataPath)
+  private val fs = IndexMaint.fs(spark, new Path(path))
+
+  // crash recovery: a half-finished rebuild swap, then in-flight appends
+  Commit.recoverSwap(fs, new Path(path), IndexMaint.fresh(path), IndexMaint.old(path),
+    IndexMaint.keep)
+  Commit.recoverAppends(fs, new Path(dataPath))
 
   /** Train the (refined) coarse quantizer and residual codebook on
     * `corpus`, encode it, and write the full initial index.
@@ -62,13 +67,16 @@ final class IvfPqIndex(
     */
   def drift(batch: DataFrame): Double = meanReconError(batch) - driftBaseline
 
-  /** Offline rebuild + crash-safe path swap (see [[IndexMaint.swapIn]]). */
+  /** Offline rebuild + crash-safe path swap ([[graft.engine.Commit.swap]]).
+    * The exactly-once ledger survives it, so the corpus must hold every
+    * committed batch. */
   def rebuildAndSwap(corpus: DataFrame, nlist: Int, m: Int = 8, ksub: Int = 16,
       lloydIterations: Int = 2): Unit = {
-    val freshPath = s"$path-rebuild"
-    new IvfPqIndex(spark, freshPath, idCol, vecCol)
-      .build(corpus, nlist, m, ksub, lloydIterations)
-    IndexMaint.swapIn(spark, path, freshPath)
+    Commit.swap(fs, new Path(path), IndexMaint.fresh(path), IndexMaint.old(path),
+        IndexMaint.keep, "rebuildAndSwap") {
+      new IvfPqIndex(spark, IndexMaint.fresh(path).toString, idCol, vecCol)
+        .build(corpus, nlist, m, ksub, lloydIterations)
+    }
   }
 
   /** The frozen coarse centroids. */
@@ -91,8 +99,8 @@ final class IvfPqIndex(
     * [[IvfIndex.appendExactlyOnce]]; returns false on a replay.
     */
   def appendExactlyOnce(batch: DataFrame, batchId: Long): Boolean =
-    IndexMaint.appendExactlyOnce(spark, dataPath, "list_id",
-      IvfPq.encode(batch, idCol, vecCol, centroids, codebook), batchId)
+    Commit.appendOnce(fs, new Path(dataPath), Commit.token(batchId, ""), "list_id",
+      IvfPq.encode(batch, idCol, vecCol, centroids, codebook))
 
   /** The persisted code table (list_id is the partition column). */
   def index: DataFrame = spark.read.parquet(dataPath)

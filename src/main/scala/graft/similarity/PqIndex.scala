@@ -1,7 +1,10 @@
 package graft.similarity
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.engine.Commit
 
 /** Persisted IVF-PQ index — the on-disk form of the FAISS-style two-level
   * layout, and the PQ sibling of [[IvfIndex]]: train once (coarse
@@ -33,10 +36,12 @@ final class PqIndex(
   private val cbPath = s"$path/codebook"
   private val dataPath = s"$path/data"
 
-  // crash recovery: heal a half-finished rebuild swap, then purge
-  // in-flight exactly-once batch traces
-  IndexMaint.recoverSwap(spark, path)
-  IndexMaint.recoverInFlight(spark, dataPath)
+  private val fs = IndexMaint.fs(spark, new Path(path))
+
+  // crash recovery: a half-finished rebuild swap, then in-flight appends
+  Commit.recoverSwap(fs, new Path(path), IndexMaint.fresh(path), IndexMaint.old(path),
+    IndexMaint.keep)
+  Commit.recoverAppends(fs, new Path(dataPath))
 
   /** Train the coarse quantizer and PQ codebook on `corpus`, encode it,
     * and write the full initial index (overwrites `path`).
@@ -76,14 +81,17 @@ final class PqIndex(
   /** Offline rebuild + path swap for quantizer drift. PQ stores only
     * codes, so the caller supplies the training corpus (the original
     * vectors, e.g. the embeddings table both quantizers were fed from);
-    * the fresh index is built beside `path` and swapped in.
+    * the fresh index is built beside `path` and swapped in
+    * ([[graft.engine.Commit.swap]]). The exactly-once ledger survives it,
+    * so the corpus must hold every committed batch.
     */
   def rebuildAndSwap(corpus: DataFrame, nlist: Int, m: Int = 8, ksub: Int = 16,
       lloydIterations: Int = 2): Unit = {
-    val freshPath = s"$path-rebuild"
-    new PqIndex(spark, freshPath, idCol, vecCol)
-      .build(corpus, nlist, m, ksub, lloydIterations)
-    IndexMaint.swapIn(spark, path, freshPath)
+    Commit.swap(fs, new Path(path), IndexMaint.fresh(path), IndexMaint.old(path),
+        IndexMaint.keep, "rebuildAndSwap") {
+      new PqIndex(spark, IndexMaint.fresh(path).toString, idCol, vecCol)
+        .build(corpus, nlist, m, ksub, lloydIterations)
+    }
   }
 
   /** The frozen coarse centroids. */
@@ -111,8 +119,8 @@ final class PqIndex(
     * [[IvfIndex.appendExactlyOnce]]; returns false on a replay.
     */
   def appendExactlyOnce(batch: DataFrame, batchId: Long): Boolean =
-    IndexMaint.appendExactlyOnce(spark, dataPath, "list_id",
-      batchRows(batch, centroids, codebook), batchId)
+    Commit.appendOnce(fs, new Path(dataPath), Commit.token(batchId, ""), "list_id",
+      batchRows(batch, centroids, codebook))
 
   /** The persisted code table (list_id is the partition column). */
   def index: DataFrame = spark.read.parquet(dataPath)

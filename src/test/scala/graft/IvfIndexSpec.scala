@@ -76,6 +76,19 @@ class IvfIndexSpec extends SparkSpec {
       "reopen must purge the uncommitted batch's orphans")
   }
 
+  test("exactly-once ledger survives a rebuild: a replayed committed id stays a no-op") {
+    val ix = new IvfIndex(spark, tmp())
+    ix.build(emb.filter(col("vec_id") < 200).select("vec_id", "embedding"), nlist = 4)
+    val batch = emb.filter(col("vec_id").between(200, 299)).select("vec_id", "embedding")
+    assert(ix.appendExactlyOnce(batch, 1L))
+    assert(ix.index.count() == 300)
+    ix.rebuildFromStoredAndSwap(nlist = 4)
+    assert(ix.index.count() == 300)
+    assert(!ix.appendExactlyOnce(batch, 1L), "a committed id must dedup after a rebuild")
+    assert(ix.index.count() == 300, "the replay must not append")
+    assert(ix.index.select("neighbor_id").distinct().count() == 300)
+  }
+
   test("streaming ingest: foreachBatch micro-batches append exactly once") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -243,4 +243,22 @@ class NearDupIndexSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("was built with"))
   }
+
+  test("release precondition: a lazy checkpoint reads as materialized only " +
+      "after a shuffled write has computed it") {
+    import graft.dedup.Blocks
+    val lazyCp = corpus.select(col("doc_id"), length(col("text")).as("n"))
+      .localCheckpoint(eager = false)
+    assert(!Blocks.materialized(lazyCp), "nothing has computed the checkpoint yet")
+    assert(!Blocks.materialized(corpus), "a plain frame is no checkpoint leaf")
+    // the same consumption shape as the index write: shuffle, then write
+    lazyCp.repartition(3, col("n")).write.mode("overwrite").parquet(tmp())
+    assert(Blocks.materialized(lazyCp), "the write must materialize the checkpoint")
+    // the ingest path checks it before releasing the blocks it no longer
+    // reads — also on a replay, whose survivor set is empty and whose
+    // write leaves the checkpoint flag unset (only the blocks tell)
+    val ix = new NearDupIndex(spark, tmp())
+    assert(ix.dedupAndAppend(corpus, "text", "doc_id").count() > 0)
+    assert(ix.dedupAndAppend(corpus, "text", "doc_id").count() == 0)
+  }
 }
